@@ -82,6 +82,7 @@ class Timer:
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    t_start = time.time()
     j0 = _cpu_jiffies()
     # scale transcript graph with the sf dir's lineitem size
     sf = 0.1 if "0.1" in sf_dir else (0.01 if "0.01" in sf_dir else 0.001)
@@ -178,16 +179,9 @@ def main():
             spark, bv_base, num_partitions=max(cpus, 8)).count(),
     )
 
-    # ---- CSR-consuming PageRank (numpy message kernel), 5 iterations
-    from webgraph_spark.algos.pagerank_csr import pagerank_csr
-
-    tm.run(
-        "pagerank_csr_5iter",
-        lambda: pagerank_csr(packed, fixed_iterations=5).ranks.count(),
-    )
     packed.unpersist()
 
-    # ---- edge-table PageRank, same 5 iterations (comparison point)
+    # ---- edge-table PageRank, 5 fixed iterations
     tm.run(
         "pagerank_edge_5iter",
         lambda: pagerank(edges, fixed_iterations=5).ranks.count(),
@@ -351,6 +345,12 @@ def main():
     if tot > 0:
         detail["host_steal_pct"] = round(100.0 * (j1[1] - j0[1]) / tot, 1)
 
+    # one detail file per run (sf + UTC start time): reruns never
+    # overwrite an earlier record
+    artifact_rel = os.path.join(
+        "BENCH",
+        f"driver_bench_sf{sf}_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime(t_start))}.json",
+    )
     out = {
         "metric": "pagerank_edges_per_sec_to_1e-6",
         "value": round(max(edges_per_sec, headline2), 1),
@@ -362,14 +362,12 @@ def main():
             "pr_iterations": res.iterations,
             "headline_pass2_edges_per_sec": round(headline2, 1),
             "host_steal_pct": detail.get("host_steal_pct"),
-            "full_detail_artifact": "BENCH/driver_bench_full.json",
+            "full_detail_artifact": artifact_rel,
         },
     }
     try:
         artifact = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "BENCH",
-            "driver_bench_full.json",
+            os.path.dirname(os.path.abspath(__file__)), artifact_rel
         )
         with open(artifact, "w") as f:
             json.dump({**out, "detail": detail}, f, indent=1)

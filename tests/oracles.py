@@ -29,16 +29,24 @@ def pagerank_numpy(
     return r
 
 
-def pagerank_numpy_fixed(adj: np.ndarray, iters: int, alpha: float = 0.85) -> np.ndarray:
-    """Exactly ``iters`` synchronous iterations (no convergence check)."""
+def pagerank_numpy_fixed(
+    adj: np.ndarray, iters: int, alpha: float = 0.85, pref: np.ndarray | None = None
+) -> np.ndarray:
+    """Exactly ``iters`` synchronous iterations (no convergence check).
+
+    ``adj`` may hold arc weights (transition ∝ weight). ``pref`` is the
+    preference vector (default uniform): the walk starts at it, and
+    teleport plus dangling mass restart to it."""
     n = adj.shape[0]
     outdeg = adj.sum(axis=1)
-    r = np.full(n, 1.0 / n)
+    if pref is None:
+        pref = np.full(n, 1.0 / n)
+    r = pref.copy()
     for _ in range(iters):
         dangling = r[outdeg == 0].sum()
         nz = outdeg > 0
         contrib = adj[nz].T @ (r[nz] / outdeg[nz])
-        r = (1 - alpha) / n + alpha * (contrib + dangling / n)
+        r = pref * ((1 - alpha) + alpha * dangling) + alpha * contrib
     return r
 
 

@@ -99,31 +99,6 @@ def test_empty_graph(spark):
     assert unpack_csr(packed).count() == 0
 
 
-def test_pagerank_csr_matches_edge_pagerank(spark):
-    from webgraph_spark.algos.pagerank import pagerank
-    from webgraph_spark.algos.pagerank_csr import pagerank_csr
-
-    g = erdos_renyi(spark, 80, 0.06, seed=12)
-    packed = pack_csr(g, num_blocks=4)
-    a = pagerank(g, fixed_iterations=6)
-    b = pagerank_csr(packed, fixed_iterations=6)
-    ra = {r.node: r.rank for r in a.ranks.collect()}
-    rb = {r.node: r.rank for r in b.ranks.collect()}
-    assert set(ra) == set(rb)
-    for k in ra:
-        assert abs(ra[k] - rb[k]) < 1e-12
-
-
-def test_pagerank_csr_converges(spark):
-    from webgraph_spark.algos.pagerank_csr import pagerank_csr
-
-    g = erdos_renyi(spark, 60, 0.08, seed=14)
-    res = pagerank_csr(pack_csr(g, num_blocks=4), tol=1e-8, max_iter=200)
-    assert res.converged
-    total = sum(r.rank for r in res.ranks.collect())
-    assert abs(total - 1.0) < 1e-9
-
-
 def test_csr_labelled_roundtrip(spark):
     """Labels ride the CSR pack as a parallel per-arc array
     (ArcLabelledImmutableGraph analog): round trip preserves

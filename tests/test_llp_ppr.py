@@ -9,19 +9,7 @@ from webgraph_spark.algos.labelprop import label_propagation
 from webgraph_spark.algos.pagerank import personalized_pagerank
 from webgraph_spark.datagen.graphs import erdos_renyi, erdos_renyi_numpy
 
-
-def _ppr_numpy(adj, seeds, iters, alpha=0.85):
-    n = adj.shape[0]
-    p = np.zeros(n)
-    p[list(seeds)] = 1.0 / len(seeds)
-    outdeg = adj.sum(axis=1)
-    r = p.copy()
-    for _ in range(iters):
-        dangling = r[outdeg == 0].sum()
-        nz = outdeg > 0
-        contrib = adj[nz].T @ (r[nz] / outdeg[nz])
-        r = p * ((1 - alpha) + alpha * dangling) + alpha * contrib
-    return r
+from .oracles import pagerank_numpy_fixed
 
 
 @pytest.mark.parametrize("n,p,seed", [(40, 0.08, 5), (80, 0.05, 6)])
@@ -36,7 +24,9 @@ def test_ppr_vs_numpy(spark, n, p, seed):
     seeds = nodes.orderBy("node").limit(5)
     seed_ids = [r.node for r in seeds.collect()]
     res = personalized_pagerank(edges, seeds, fixed_iterations=7)
-    want = _ppr_numpy(adj, seed_ids, iters=7)
+    pref = np.zeros(n)
+    pref[seed_ids] = 1.0 / len(seed_ids)
+    want = pagerank_numpy_fixed(adj, iters=7, pref=pref)
     got = np.zeros(n)
     pdf = res.ranks.toPandas()
     got[pdf["node"].to_numpy()] = pdf["rank"].to_numpy()

@@ -192,3 +192,74 @@ def test_trustrank_trust_confined_to_reachable_set(spark):
     a_mass = sum(v for n, v in out.items() if n < 100)
     b_mass = sum(v for n, v in out.items() if n >= 100)
     assert a_mass > 0.999 and b_mass < 1e-9
+
+
+# ------------------------------------- one kernel, three entry points
+
+def _run_wrapper(spark, which, arcs, seeds=(), iters=6):
+    from webgraph_spark.algos.pagerank import (
+        pagerank_weighted,
+        personalized_pagerank,
+    )
+
+    df = spark.createDataFrame(arcs, "src long, dst long, label long")
+    if which == "pagerank":
+        return pagerank(df.select("src", "dst"), fixed_iterations=iters)
+    if which == "ppr":
+        s = spark.createDataFrame([(v,) for v in seeds], "node long")
+        return personalized_pagerank(
+            df.select("src", "dst"), s, fixed_iterations=iters
+        )
+    return pagerank_weighted(df, fixed_iterations=iters)
+
+
+SELF_LOOPS = [(i, i, i + 1) for i in range(4)]
+HUB_STAR = [(0, i, i) for i in range(1, 7)]  # leaves are dangling
+
+
+@pytest.mark.parametrize("which", ["pagerank", "ppr", "weighted"])
+@pytest.mark.parametrize(
+    "arcs", [SELF_LOOPS, HUB_STAR], ids=["self_loops", "hub_star"]
+)
+def test_degenerate_graphs_vs_numpy(spark, which, arcs):
+    n = 1 + max(max(s, d) for s, d, _ in arcs)
+    seeds = (0, 2)
+    res = _run_wrapper(spark, which, arcs, seeds=seeds)
+    adj = np.zeros((n, n))
+    for s, d, w in arcs:
+        adj[s, d] += w if which == "weighted" else 1.0
+    pref = None
+    if which == "ppr":
+        pref = np.zeros(n)
+        pref[list(seeds)] = 1.0 / len(seeds)
+    want = pagerank_numpy_fixed(adj, iters=6, pref=pref)
+    got = _ranks_array(res, n)
+    assert res.ranks.count() == n
+    np.testing.assert_allclose(got, want, atol=1e-12)
+    assert abs(got.sum() - 1.0) < 1e-12
+
+
+def test_ppr_seed_set_deduplicated_and_restricted_to_graph(spark):
+    """Duplicate seeds count once and seeds outside the graph are
+    dropped, so every node is one row and total mass stays 1."""
+    arcs = [(0, 1, 1), (1, 2, 1), (2, 0, 1), (2, 3, 1)]
+    res = _run_wrapper(spark, "ppr", arcs, seeds=(0, 0, 99))
+    rows = res.ranks.collect()
+    assert sorted(r.node for r in rows) == [0, 1, 2, 3]
+    adj = np.zeros((4, 4))
+    for s, d, _ in arcs:
+        adj[s, d] = 1.0
+    want = pagerank_numpy_fixed(adj, iters=6, pref=np.array([1.0, 0, 0, 0]))
+    np.testing.assert_allclose(_ranks_array(res, 4), want, atol=1e-12)
+    assert abs(sum(r.rank for r in rows) - 1.0) < 1e-12
+    # no seed left in the graph: empty result
+    assert _run_wrapper(spark, "ppr", arcs, seeds=(99,)).ranks.count() == 0
+
+
+@pytest.mark.parametrize("which", ["pagerank", "ppr", "weighted"])
+def test_empty_graph_releases_persisted_frames(spark, which):
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    res = _run_wrapper(spark, which, [], seeds=(0,))
+    assert res.ranks.count() == 0 and res.converged
+    assert set(jsc.getPersistentRDDs().keys()) - before == set()

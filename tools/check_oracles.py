@@ -11,6 +11,10 @@ order-insensitive value multiset. Usage:
 normalization — the local replica of the driver's bitwise value hash,
 which catches last-ulp divergences (e.g. BigDecimal HALF_UP vs libm
 round paths) that 9-sig-fig text hides.
+
+A query where Spark and DuckDB both return 0 rows prints ``OK-empty``
+instead of ``OK``: agreeing on nothing shows nothing, so those queries
+are listed apart in the summary.
 """
 
 from __future__ import annotations
@@ -75,6 +79,7 @@ def main():
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = []
+    empty = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -100,7 +105,13 @@ def main():
         ok_vals = False
         if ok_rows and ok_cols:
             ok_vals = frame_multiset(sdf) == frame_multiset(odf)
-        status = "OK   " if (ok_rows and ok_cols and ok_vals) else "FAIL "
+        if not (ok_rows and ok_cols and ok_vals):
+            status = "FAIL "
+        elif len(sdf) == 0:
+            status = "OK-empty"
+            empty.append(name)
+        else:
+            status = "OK   "
         col_info = "=" if ok_cols else f"{sorted(sdf.columns)} != {sorted(odf.columns)}"
         print(
             f"{status} {name}: spark={len(sdf)} duck={len(odf)} "
@@ -116,6 +127,8 @@ def main():
                 print(f"       spark-only: {extra}")
                 print(f"       duck-only : {missing}")
     print()
+    if empty:
+        print("EMPTY (both sides 0 rows):", empty)
     if failures:
         print("FAILURES:", failures)
         sys.exit(1)

@@ -2,9 +2,22 @@
 
 Mandated by BASELINE.json north_rule (the reference's companion LAW
 library computes PageRank on the same BVGraph primitives; see SURVEY.md
-§2.10). Semantics: teleport alpha (damping) 0.85, uniform preference,
-dangling-node mass redistributed uniformly — matching
-``numpy``/``networkx`` power iteration, allclose 1e-6 at convergence.
+§2.10). The rank family is one recurrence — PageRank with a transition
+matrix and a preference vector, as in LAW's ``PageRank
+--preferenceVector`` — run by ONE synchronous kernel,
+``_power_iteration``, behind three entry points:
+
+- :func:`pagerank`: uniform preference, transition 1/outdeg, dangling
+  mass redistributed uniformly — matching ``numpy``/``networkx`` power
+  iteration, allclose 1e-6 at convergence; optional warm start;
+- :func:`personalized_pagerank`: preference uniform on a seed set,
+  dangling mass restarts to the seeds;
+- :func:`pagerank_weighted`: transition proportional to arc weight.
+
+Each entry point only builds its initial state; the kernel owns the
+loop and the lifetime of the persisted inputs. :func:`trustrank` is
+two kernel runs. :func:`pagerank_fused` is separate on purpose: it
+iterates the leaked-mass recurrence and normalizes at the end.
 
 Scale design (SURVEY.md §4 physical decisions):
 - out-degree is denormalized into the edge table ONCE (reference analog:
@@ -43,13 +56,24 @@ class PageRankResult:
     delta: float  # final L-inf delta
 
 
-def _prepare(edges: DataFrame, num_partitions: int | None):
-    """Degree-annotated, src-partitioned edge table + flagged node set."""
+def _prepare(
+    edges: DataFrame, num_partitions: int | None, weight_col: str | None = None
+):
+    """Degree-annotated, src-partitioned edge table + flagged node set.
+
+    With ``weight_col`` the edge table also carries the weight as ``w``
+    (cast to long) and ``outdeg`` is the out-weight sum instead of the
+    arc count; a node is dangling when it has no out-arcs either way.
+    """
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select("src", "dst")
-    out_deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+    if weight_col is None:
+        e = edges.select("src", "dst")
+        out_deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+    else:
+        e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
+        out_deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
     ew = e.join(out_deg, "src").repartition(num_partitions, "src").persist()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -269,6 +293,159 @@ def pagerank_fused(
     )
 
 
+def _uniform(nodes: DataFrame, n: int) -> DataFrame:
+    """Initial state 1/n on every node."""
+    return nodes.select("node", F.lit(1.0 / n).alias("rank"), "dang")
+
+
+def _power_iteration(
+    edges: DataFrame,
+    init,
+    alpha: float,
+    tol: float,
+    max_iter: int,
+    num_partitions: int | None,
+    fixed_iterations: int | None,
+    checkpoint_dir: str | None = None,
+    run_id: str = "run",
+    salt_buckets: int | None = None,
+    weight_col: str | None = None,
+) -> PageRankResult:
+    """The synchronous PageRank loop behind :func:`pagerank`,
+    :func:`personalized_pagerank` and :func:`pagerank_weighted`.
+
+    ``init(nodes, n)`` builds the initial state ``(node, rank, dang[, p])``
+    from the flagged node set, or returns None for an empty result. The
+    recurrence has two knobs:
+
+    - **message** ``rank/outdeg``, or ``rank*w/outdeg`` with
+      ``weight_col`` (``outdeg`` is then the out-weight sum);
+    - **teleport** the scalar ``(1-α)/n + α·dmass/n`` (uniform
+      preference), or the column ``p·((1-α) + α·dmass)`` when the state
+      carries a preference column ``p`` — dangling mass then restarts
+      to the preference vector.
+
+    Per iteration: one co-partitioned shuffle_hash join, one
+    ``groupBy(dst)``, one left join back into the state; dangling mass
+    and the L∞ delta ride the materializing action as Observation
+    metrics. The persisted edge and node frames are released on every
+    exit, the empty graph included.
+    """
+    spark = edges.sparkSession
+    ew, nodes, _ = _prepare(edges, num_partitions, weight_col)
+    try:
+        n = nodes.count()
+        ranks0 = init(nodes, n) if n else None
+        if ranks0 is None:
+            return PageRankResult(
+                spark.createDataFrame([], "node long, rank double"), 0, True, 0.0
+            )
+        # dang (and p) are static, but riding them in the state frame
+        # keeps each iteration a single self-contained join tree
+        cols = ranks0.columns
+        personalized = "p" in cols
+        if weight_col is None:
+            msg = F.col("rank") / F.col("outdeg")
+        else:
+            msg = F.col("rank") * F.col("w") / F.col("outdeg")
+        carry: dict = {"dmass": None, "delta": float("inf")}
+
+        def step(ranks: DataFrame, k: int):
+            if carry["dmass"] is None:
+                # only on (re)start: dangling mass of the carried-in state
+                carry["dmass"] = (
+                    ranks.where(F.col("dang") > 0).agg(F.sum("rank")).collect()[0][0]
+                    or 0.0
+                )
+            if personalized:
+                teleport = F.col("p") * F.lit((1.0 - alpha) + alpha * carry["dmass"])
+                metrics = {}
+            else:
+                base = (1.0 - alpha) / n + alpha * carry["dmass"] / n
+                teleport = F.lit(base)
+                metrics = {"base": base}
+
+            # shuffle_hash hint: ranks are co-partitioned with ew on the
+            # join key; without the hint the planner broadcast-joins the
+            # rank side at small scale, rebuilding a multi-MB broadcast
+            # EVERY iteration (impossible at 10^10 nodes anyway)
+            contribs_in = ew.join(
+                ranks.select(F.col("node").alias("src"), "rank").hint("shuffle_hash"),
+                "src",
+            ).select("src", "dst", msg.alias("c"))
+            if salt_buckets:
+                # explicit two-level salted aggregation for extreme hub
+                # dst: salt by a hash of src so one hub spreads over buckets
+                contribs = (
+                    contribs_in.groupBy(
+                        "dst", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)).alias("_salt")
+                    )
+                    .agg(F.sum("c").alias("c"))
+                    .groupBy("dst")
+                    .agg(F.sum("c").alias("contrib"))
+                )
+            else:
+                contribs = contribs_in.groupBy("dst").agg(F.sum("c").alias("contrib"))
+
+            # fold the old rank into the state frame: the state row set IS
+            # the node set, so one left join against contribs replaces a
+            # nodes-join + old-rank-join pair (the state-side hash build
+            # was the dominant per-iteration fixed cost)
+            obs = Observation()
+            new_ranks = (
+                ranks.withColumnRenamed("rank", "_old")
+                .join(
+                    contribs.withColumnRenamed("dst", "node").hint("shuffle_hash"),
+                    "node",
+                    "left",
+                )
+                .select(
+                    "node",
+                    (
+                        teleport
+                        + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
+                    ).alias("rank"),
+                    *cols[2:],
+                    "_old",
+                )
+                .observe(
+                    obs,
+                    F.sum(F.col("rank") * F.col("dang")).alias("dmass"),
+                    F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
+                )
+                .select(*cols)
+            )
+            return new_ranks, metrics, obs
+
+        def stop(obs_metrics: dict, k: int) -> bool:
+            carry["dmass"] = obs_metrics.get("dmass", carry["dmass"]) or 0.0
+            carry["delta"] = obs_metrics.get("delta", float("inf"))
+            if fixed_iterations is not None:
+                return False
+            return carry["delta"] < tol
+
+        max_it = fixed_iterations if fixed_iterations is not None else max_iter
+        with iteration_confs(spark):
+            state, iters, done = iterate(
+                spark,
+                ranks0,
+                step,
+                max_iter=max_it,
+                checkpoint_dir=checkpoint_dir,
+                run_id=run_id,
+                stop=stop,
+            )
+        return PageRankResult(
+            state.select("node", "rank"),
+            iters,
+            done or fixed_iterations is not None,
+            float(carry["delta"]),
+        )
+    finally:
+        ew.unpersist()
+        nodes.unpersist()
+
+
 def pagerank(
     edges: DataFrame,
     alpha: float = 0.85,
@@ -297,17 +474,10 @@ def pagerank(
     shrinks (tested: small edge deltas converge in a fraction of the
     cold-start rounds).
     """
-    spark = edges.sparkSession
-    ew, nodes, P = _prepare(edges, num_partitions)
-    n = nodes.count()
-    if n == 0:
-        return PageRankResult(
-            spark.createDataFrame([], "node long, rank double"), 0, True, 0.0
-        )
 
-    # state: (node, rank, dang); dang is static but riding it in the
-    # state frame keeps each iteration a single self-contained join tree
-    if init_ranks is not None:
+    def init(nodes: DataFrame, n: int) -> DataFrame:
+        if init_ranks is None:
+            return _uniform(nodes, n)
         seeded = nodes.join(
             init_ranks.select("node", F.col("rank").alias("_r0")), "node", "left"
         ).select(
@@ -316,99 +486,13 @@ def pagerank(
             "dang",
         )
         total = seeded.agg(F.sum("rank")).collect()[0][0] or 1.0
-        ranks0 = seeded.select(
+        return seeded.select(
             "node", (F.col("rank") / F.lit(float(total))).alias("rank"), "dang"
         )
-    else:
-        ranks0 = nodes.select("node", F.lit(1.0 / n).alias("rank"), "dang")
-    carry: dict = {"dmass": None, "delta": float("inf")}
 
-    def step(ranks: DataFrame, k: int):
-        if carry["dmass"] is None:
-            # only on (re)start: dangling mass of the carried-in state
-            carry["dmass"] = (
-                ranks.where(F.col("dang") > 0).agg(F.sum("rank")).collect()[0][0]
-                or 0.0
-            )
-        base = (1.0 - alpha) / n + alpha * carry["dmass"] / n
-
-        # shuffle_hash hint: ranks are co-partitioned with ew on the join
-        # key; without the hint the planner broadcast-joins the rank side
-        # at small scale, rebuilding a multi-MB broadcast EVERY iteration
-        # (and a broadcast would be impossible at 10^10 nodes anyway)
-        contribs_in = ew.join(
-            ranks.select(F.col("node").alias("src"), "rank").hint("shuffle_hash"),
-            "src",
-        ).select("src", "dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-        if salt_buckets:
-            # explicit two-level salted aggregation for extreme hub dst:
-            # salt by a hash of src so one hub dst spreads over buckets
-            contribs = (
-                contribs_in.groupBy(
-                    "dst", F.pmod(F.xxhash64("src"), F.lit(salt_buckets)).alias("_salt")
-                )
-                .agg(F.sum("c").alias("c"))
-                .groupBy("dst")
-                .agg(F.sum("c").alias("contrib"))
-            )
-        else:
-            contribs = contribs_in.groupBy("dst").agg(F.sum("c").alias("contrib"))
-
-        # fold the old rank into the state frame: the state row set IS the
-        # node set, so one left join against contribs replaces the former
-        # nodes-join + old-rank-join pair (2 joins/iter instead of 3 — the
-        # state-side hash build was the dominant per-iteration fixed cost)
-        obs = Observation()
-        new_ranks = (
-            ranks.withColumnRenamed("rank", "_old")
-            .join(
-                contribs.withColumnRenamed("dst", "node").hint("shuffle_hash"),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "dang",
-                "_old",
-            )
-            .observe(
-                obs,
-                F.sum(F.col("rank") * F.col("dang")).alias("dmass"),
-                F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-            )
-            .select("node", "rank", "dang")
-        )
-        return new_ranks, {"base": base}, obs
-
-    def stop(obs_metrics: dict, k: int) -> bool:
-        carry["dmass"] = obs_metrics.get("dmass", carry["dmass"]) or 0.0
-        carry["delta"] = obs_metrics.get("delta", float("inf"))
-        if fixed_iterations is not None:
-            return False
-        return carry["delta"] < tol
-
-    max_it = fixed_iterations if fixed_iterations is not None else max_iter
-    with iteration_confs(spark):
-        state, iters, done = iterate(
-            spark,
-            ranks0,
-            step,
-            max_iter=max_it,
-            checkpoint_dir=checkpoint_dir,
-            run_id=run_id,
-            stop=stop,
-        )
-    ew.unpersist()
-    nodes.unpersist()
-    return PageRankResult(
-        state.select("node", "rank"),
-        iters,
-        done or fixed_iterations is not None,
-        float(carry["delta"]),
+    return _power_iteration(
+        edges, init, alpha, tol, max_iter, num_partitions, fixed_iterations,
+        checkpoint_dir=checkpoint_dir, run_id=run_id, salt_buckets=salt_buckets,
     )
 
 
@@ -431,106 +515,25 @@ def personalized_pagerank(
     iteration as :func:`pagerank`, SURVEY.md §2.10 mandated family):
     ``r(v) <- p(v)·((1−α) + α·dangling_mass) + α·Σ_{u→v} r(u)/outdeg(u)``
     where ``p`` is 1/|S| on seeds, 0 elsewhere — dangling mass restarts
-    to the seed distribution, so total mass stays exactly 1.
-
-    Same scale posture as :func:`pagerank`: the static ``p`` column
-    rides the state frame (no extra join), one co-partitioned
-    shuffle_hash join + one map-side-combined groupBy per iteration,
-    convergence stats via Observation (one job per iteration).
+    to the seed distribution, so total mass stays exactly 1. ``S`` is
+    the set of distinct seeds that are graph nodes: duplicates count
+    once and seeds outside the graph are dropped; with none left the
+    result is empty.
     """
-    spark = edges.sparkSession
-    ew, nodes, P = _prepare(edges, num_partitions)
-    n = nodes.count()
-    n_seeds = seeds.count()
-    if n == 0 or n_seeds == 0:
-        ew.unpersist()
-        nodes.unpersist()
-        return PageRankResult(
-            spark.createDataFrame([], "node long, rank double"), 0, True, 0.0
-        )
 
-    p0 = 1.0 / n_seeds
-    ranks0 = (
-        nodes.join(seeds.select("node", F.lit(p0).alias("p")), "node", "left")
-        .select(
-            "node",
-            F.coalesce("p", F.lit(0.0)).alias("rank"),
-            "dang",
-            F.coalesce("p", F.lit(0.0)).alias("p"),
-        )
-    )
-    carry: dict = {"dmass": None, "delta": float("inf")}
+    def init(nodes: DataFrame, n: int) -> DataFrame | None:
+        s = seeds.select("node").distinct().join(nodes.select("node"), "node")
+        n_seeds = s.count()
+        if n_seeds == 0:
+            return None
+        p = F.coalesce("p", F.lit(0.0))
+        return nodes.join(
+            s.select("node", F.lit(1.0 / n_seeds).alias("p")), "node", "left"
+        ).select("node", p.alias("rank"), "dang", p.alias("p"))
 
-    def step(ranks: DataFrame, k: int):
-        if carry["dmass"] is None:
-            carry["dmass"] = (
-                ranks.where(F.col("dang") > 0).agg(F.sum("rank")).collect()[0][0]
-                or 0.0
-            )
-        scale = (1.0 - alpha) + alpha * carry["dmass"]
-        contribs = (
-            ew.join(
-                ranks.select(F.col("node").alias("src"), "rank").hint(
-                    "shuffle_hash"
-                ),
-                "src",
-            )
-            .select("dst", (F.col("rank") / F.col("outdeg")).alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        obs = Observation()
-        new_ranks = (
-            ranks.withColumnRenamed("rank", "_old")
-            .join(
-                contribs.withColumnRenamed("dst", "node").hint("shuffle_hash"),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.col("p") * F.lit(scale)
-                    + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "dang",
-                "p",
-                "_old",
-            )
-            .observe(
-                obs,
-                F.sum(F.col("rank") * F.col("dang")).alias("dmass"),
-                F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-            )
-            .select("node", "rank", "dang", "p")
-        )
-        return new_ranks, {}, obs
-
-    def stop(obs_metrics: dict, k: int) -> bool:
-        carry["dmass"] = obs_metrics.get("dmass", carry["dmass"]) or 0.0
-        carry["delta"] = obs_metrics.get("delta", float("inf"))
-        if fixed_iterations is not None:
-            return False
-        return carry["delta"] < tol
-
-    max_it = fixed_iterations if fixed_iterations is not None else max_iter
-    with iteration_confs(spark):
-        state, iters, done = iterate(
-            spark,
-            ranks0,
-            step,
-            max_iter=max_it,
-            checkpoint_dir=checkpoint_dir,
-            run_id=run_id,
-            stop=stop,
-        )
-    ew.unpersist()
-    nodes.unpersist()
-    return PageRankResult(
-        state.select("node", "rank"),
-        iters,
-        done or fixed_iterations is not None,
-        float(carry["delta"]),
+    return _power_iteration(
+        edges, init, alpha, tol, max_iter, num_partitions, fixed_iterations,
+        checkpoint_dir=checkpoint_dir, run_id=run_id,
     )
 
 
@@ -545,104 +548,13 @@ def pagerank_weighted(
 ) -> PageRankResult:
     """PageRank over a labelled edge table with arc-weight-proportional
     transition probabilities: contribution of u to v is
-    rank(u) * w(u,v) / W(u), W(u) = sum of u's out-weights. Dangling
-    mass (nodes with no out-arcs) redistributes uniformly, exactly as in
-    :func:`pagerank`; with all weights equal the two agree. Same
-    iteration shape — one co-partitioned shuffle_hash join + one
-    map-side-combinable groupBy per iteration."""
-    spark = edges.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-    out_w = e.groupBy("src").agg(F.sum("w").alias("wsum"))
-    ew = e.join(out_w, "src").repartition(num_partitions, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionByName(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            out_w.select(F.col("src").alias("node"), F.lit(0.0).alias("z")),
-            "node",
-            "left",
-        )
-        .select("node", F.when(F.col("z").isNull(), 1.0).otherwise(0.0).alias("dang"))
-        .repartition(num_partitions, "node")
-        .persist()
-    )
-    n = nodes.count()
-    if n == 0:
-        ew.unpersist()
-        nodes.unpersist()
-        return PageRankResult(
-            spark.createDataFrame([], "node long, rank double"), 0, True, 0.0
-        )
-    ranks0 = nodes.select("node", F.lit(1.0 / n).alias("rank"), "dang")
-    carry: dict = {"dmass": None, "delta": float("inf")}
-
-    def step(ranks: DataFrame, k: int):
-        if carry["dmass"] is None:
-            carry["dmass"] = (
-                ranks.where(F.col("dang") > 0).agg(F.sum("rank")).collect()[0][0]
-                or 0.0
-            )
-        base = (1.0 - alpha) / n + alpha * carry["dmass"] / n
-        contribs = (
-            ew.join(
-                ranks.select(F.col("node").alias("src"), "rank").hint("shuffle_hash"),
-                "src",
-            )
-            .select(
-                "dst",
-                (F.col("rank") * F.col("w") / F.col("wsum")).alias("c"),
-            )
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        obs = Observation()
-        new_ranks = (
-            ranks.withColumnRenamed("rank", "_old")
-            .join(
-                contribs.withColumnRenamed("dst", "node").hint("shuffle_hash"),
-                "node",
-                "left",
-            )
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(alpha) * F.coalesce(F.col("contrib"), F.lit(0.0))
-                ).alias("rank"),
-                "dang",
-                "_old",
-            )
-            .observe(
-                obs,
-                F.sum(F.col("rank") * F.col("dang")).alias("dmass"),
-                F.max(F.abs(F.col("rank") - F.col("_old"))).alias("delta"),
-            )
-            .select("node", "rank", "dang")
-        )
-        return new_ranks, {"base": base}, obs
-
-    def stop(obs_metrics: dict, k: int) -> bool:
-        carry["dmass"] = obs_metrics.get("dmass", carry["dmass"]) or 0.0
-        carry["delta"] = obs_metrics.get("delta", float("inf"))
-        if fixed_iterations is not None:
-            return False
-        return carry["delta"] < tol
-
-    max_it = fixed_iterations if fixed_iterations is not None else max_iter
-    with iteration_confs(spark):
-        state, iters, done = iterate(
-            spark, ranks0, step, max_iter=max_it, stop=stop
-        )
-    ew.unpersist()
-    nodes.unpersist()
-    return PageRankResult(
-        state.select("node", "rank"),
-        iters,
-        done or fixed_iterations is not None,
-        float(carry["delta"]),
+    rank(u) * w(u,v) / W(u), W(u) = sum of u's out-weights (weights are
+    cast to long). Dangling mass (nodes with no out-arcs) redistributes
+    uniformly, exactly as in :func:`pagerank`; with all weights equal
+    the two agree."""
+    return _power_iteration(
+        edges, _uniform, alpha, tol, max_iter, num_partitions, fixed_iterations,
+        weight_col=weight_col,
     )
 
 
