@@ -3,7 +3,10 @@ per-partition lineage + metrics)."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
+from pyspark.sql import functions as F
 
 from webgraph_spark.algos.components import connected_components
 from webgraph_spark.algos.pagerank import pagerank
@@ -70,6 +73,87 @@ def test_lineage_table(spark, tmp_path):
     n_nodes = lin[lin["iteration"] == 1]["rows"].sum()
     assert lin[lin["iteration"] == 3]["rows"].sum() == n_nodes
     assert mgr.completed_iterations() == [1, 2, 3]
+
+
+def _direct_lineage(spark, ckpt, iterations):
+    """(iteration, file, rows, checksum) recomputed straight from the
+    ``iter_*`` directories, with schema inference."""
+    paths = {f"{ckpt}/iter_{k:05d}": k for k in iterations}
+    df = spark.read.parquet(*paths)
+    per_file = df.groupBy(F.input_file_name().alias("file")).agg(
+        F.count("*").alias("rows"),
+        F.bit_xor(F.xxhash64(*df.columns)).alias("checksum"),
+    )
+    out = []
+    for r in per_file.collect():
+        (k,) = [k for p, k in paths.items() if f"{p}/" in r.file]
+        out.append((k, r.file, r.rows, r.checksum))
+    return sorted(out)
+
+
+def _flushed_lineage(mgr):
+    return sorted(
+        (r.iteration, r.file, r.rows, r.checksum) for r in mgr.lineage().collect()
+    )
+
+
+def test_lineage_matches_direct_recomputation(spark, tmp_path):
+    """The one lineage pass per run records, for every (iteration,
+    file), the same rows/checksum as a direct per-file aggregate."""
+    g = erdos_renyi(spark, 30, 0.1, seed=31)
+    ckpt = str(tmp_path / "pr")
+    pagerank(g, fixed_iterations=3, checkpoint_dir=ckpt)
+    mgr = CheckpointManager(spark, ckpt)
+    assert _flushed_lineage(mgr) == _direct_lineage(spark, ckpt, [1, 2, 3])
+    lin = mgr.lineage().toPandas()
+    assert lin["t_write_ms"].notna().all()
+    assert lin["metrics"].str.contains("base").all()
+
+
+def test_lineage_backfilled_after_kill(spark, tmp_path, monkeypatch):
+    """A run killed before its lineage flush leaves complete states
+    without lineage rows; the resumed run backfills them (null
+    t_write_ms/metrics) and no iteration is recorded twice."""
+    g = erdos_renyi(spark, 30, 0.1, seed=37)
+    ckpt = str(tmp_path / "pr")
+    with monkeypatch.context() as m:
+        m.setattr(CheckpointManager, "flush_lineage", lambda self: None)
+        pagerank(g, fixed_iterations=2, checkpoint_dir=ckpt)
+    mgr = CheckpointManager(spark, ckpt)
+    assert mgr.completed_iterations() == [1, 2]
+    assert not os.path.exists(ckpt + "/_lineage")
+
+    pagerank(g, fixed_iterations=4, checkpoint_dir=ckpt)
+    flushed = _flushed_lineage(mgr)
+    assert flushed == _direct_lineage(spark, ckpt, [1, 2, 3, 4])
+    lin = mgr.lineage().toPandas()
+    assert not lin.duplicated(["iteration", "file"]).any()
+    backfilled = lin["iteration"] <= 2
+    assert lin.loc[backfilled, ["t_write_ms", "metrics"]].isna().all().all()
+    assert lin.loc[~backfilled, "t_write_ms"].notna().all()
+
+    # resuming a finished run writes no further lineage
+    pagerank(g, fixed_iterations=4, checkpoint_dir=ckpt)
+    assert _flushed_lineage(mgr) == flushed
+
+
+def test_durable_pagerank_adds_at_most_two_jobs(spark, tmp_path):
+    """Each durable iteration is one Spark job (its state write), as in
+    memory; lineage is one job per run, not one per iteration."""
+    g = erdos_renyi(spark, 30, 0.1, seed=29)
+    sc = spark.sparkContext
+
+    def n_jobs(group, **kw):
+        sc.setJobGroup(group, group)
+        try:
+            pagerank(g, fixed_iterations=6, **kw)
+        finally:
+            sc._jsc.clearJobGroup()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    in_memory = n_jobs("jobcount-in-memory")
+    durable = n_jobs("jobcount-durable", checkpoint_dir=str(tmp_path / "pr"))
+    assert durable <= in_memory + 2, (in_memory, durable)
 
 
 def test_cc_resume(spark, tmp_path):

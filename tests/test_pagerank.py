@@ -143,6 +143,30 @@ def test_weighted_vs_numpy_weighted_power_iteration(spark):
     assert abs(got.sum() - 1.0) < 1e-9
 
 
+@pytest.mark.parametrize(
+    "arcs",
+    [
+        [(0, 1, 0.4), (0, 2, 0.6), (1, 2, 1.0), (2, 0, 2.0)],
+        [(0, 1, 0.0), (1, 0, 1.0)],
+    ],
+    ids=["fractional", "zero_out_weight"],
+)
+def test_weighted_fractional_weights_vs_numpy(spark, arcs):
+    """Weights count as given, not truncated; a node whose out-weights
+    sum to 0 is dangling and sends nothing."""
+    from webgraph_spark.algos.pagerank import pagerank_weighted
+
+    n, iters = 1 + max(max(s, d) for s, d, _ in arcs), 6
+    df = spark.createDataFrame(arcs, "src long, dst long, label double")
+    res = pagerank_weighted(df, fixed_iterations=iters)
+    adj = np.zeros((n, n))
+    for s, d, w in arcs:
+        adj[s, d] += w
+    np.testing.assert_allclose(
+        _ranks_array(res, n), pagerank_numpy_fixed(adj, iters), atol=1e-12
+    )
+
+
 # ----------------------------------------------- warm-start / incremental
 
 def test_warm_start_same_fixpoint_fewer_iterations(spark):

@@ -62,8 +62,11 @@ def _prepare(
     """Degree-annotated, src-partitioned edge table + flagged node set.
 
     With ``weight_col`` the edge table also carries the weight as ``w``
-    (cast to long) and ``outdeg`` is the out-weight sum instead of the
-    arc count; a node is dangling when it has no out-arcs either way.
+    (cast to double) and ``outdeg`` is the out-weight sum instead of the
+    arc count. A node is dangling when it has no out-arcs or, weighted,
+    when its out-weight sum is not positive: its arcs are dropped, so it
+    sends no messages. Integer weights give the same bits as a long sum
+    would, since sums of integer-valued doubles are exact below 2^53.
     """
     spark = edges.sparkSession
     if num_partitions is None:
@@ -72,8 +75,10 @@ def _prepare(
         e = edges.select("src", "dst")
         out_deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
     else:
-        e = edges.select("src", "dst", F.col(weight_col).cast("long").alias("w"))
-        out_deg = e.groupBy("src").agg(F.sum("w").alias("outdeg"))
+        e = edges.select("src", "dst", F.col(weight_col).cast("double").alias("w"))
+        out_deg = (
+            e.groupBy("src").agg(F.sum("w").alias("outdeg")).where(F.col("outdeg") > 0)
+        )
     ew = e.join(out_deg, "src").repartition(num_partitions, "src").persist()
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -549,9 +554,10 @@ def pagerank_weighted(
     """PageRank over a labelled edge table with arc-weight-proportional
     transition probabilities: contribution of u to v is
     rank(u) * w(u,v) / W(u), W(u) = sum of u's out-weights (weights are
-    cast to long). Dangling mass (nodes with no out-arcs) redistributes
-    uniformly, exactly as in :func:`pagerank`; with all weights equal
-    the two agree."""
+    cast to double, so fractional weights count as given). Dangling
+    mass (nodes with no out-arcs, or a non-positive out-weight sum)
+    redistributes uniformly, exactly as in :func:`pagerank`; with all
+    weights equal the two agree."""
     return _power_iteration(
         edges, _uniform, alpha, tol, max_iter, num_partitions, fixed_iterations,
         weight_col=weight_col,

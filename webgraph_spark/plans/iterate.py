@@ -11,14 +11,22 @@ properties BVGraph.java:2554-2650). In Spark the concerns map to:
 - **resumability**: each iteration directory is committed atomically by
   Spark's _SUCCESS marker; ``latest()`` finds the last complete
   iteration, so a killed run restarts exactly where it stopped.
-- **per-partition lineage/metrics**: after each write we aggregate per
-  output file (= per partition of the durable artifact): row count plus
-  an order-insensitive BIT_XOR(xxhash64(*)) checksum — verifiable
-  without re-reading history, stored in ``<base>/_lineage``.
-- **one job per iteration**: convergence statistics (L-inf delta,
-  changed-row counts, dangling mass) ride on the materializing action
-  as ``Observation`` metrics instead of separate aggregate jobs — at
-  hub-skew scale an extra full-table scan per iteration is real money.
+- **per-partition lineage/metrics**: for every output file (= partition
+  of the durable artifact) of every iteration, a row count plus an
+  order-insensitive BIT_XOR(xxhash64(*)) checksum — verifiable without
+  re-reading history, stored in ``<base>/_lineage``. The rows are
+  computed once per run, not once per iteration: one multi-path scan
+  over that run's ``iter_*`` directories when the loop ends (converged,
+  ``max_iter`` or an exception). A resumed run first backfills rows,
+  with null ``t_write_ms`` and ``metrics``, for completed iterations a
+  killed run never flushed.
+- **one job per iteration**: the state write (or, in memory, the eager
+  local checkpoint) is the iteration's only Spark job. Convergence
+  statistics (L-inf delta, changed-row counts, dangling mass) ride on
+  it as ``Observation`` metrics instead of separate aggregate jobs —
+  at hub-skew scale an extra full-table scan per iteration is real
+  money — and the durable state is re-read with the schema it was
+  written with, so parquet schema inference launches no job either.
 """
 
 from __future__ import annotations
@@ -27,6 +35,7 @@ import time
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def release_local_checkpoint(df: DataFrame) -> None:
@@ -148,6 +157,13 @@ def iteration_confs(spark: SparkSession, extra: dict | None = None):
                 spark.conf.set(k, v)
 
 
+# one row per (iteration, state file) in <base>/_lineage
+LINEAGE_SCHEMA = (
+    "run_id string, iteration int, file string, rows long, checksum long, "
+    "t_write_ms int, ts timestamp, metrics string"
+)
+
+
 class CheckpointManager:
     """Manages ``<base_dir>/iter_<k>`` state snapshots + a lineage table."""
 
@@ -164,6 +180,11 @@ class CheckpointManager:
         self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(self.base_dir).getFileSystem(self._hconf)
+        self._lineage_path = f"{self.base_dir}/_lineage"
+        # (iteration, t_write_ms, metrics) awaiting flush_lineage, and the
+        # schema the states were written with (one step -> one schema)
+        self._pending: list[tuple] = []
+        self._schema: StructType | None = None
 
     # ------------------------------------------------------------ paths
     def _iter_path(self, k: int) -> str:
@@ -199,40 +220,86 @@ class CheckpointManager:
 
     # ----------------------------------------------------------- save
     def save(self, df: DataFrame, iteration: int, metrics: dict | None = None) -> DataFrame:
-        """Write iteration state, append lineage rows, return the re-read
-        (lineage-truncated, durable) DataFrame. The write IS the
-        materializing action — attached Observations fire here."""
+        """Write iteration state and return it re-read (lineage-truncated,
+        durable). The write is the iteration's only Spark job: attached
+        Observations fire on it, the re-read reuses ``df``'s schema
+        instead of inferring it, and the iteration's lineage rows are
+        queued for :meth:`flush_lineage`."""
         from ..sources.storage import read_state, write_state
 
         path = self._iter_path(iteration)
         t0 = time.time()
         write_state(df, path, self.table_format)
         t_write_ms = int((time.time() - t0) * 1000)
+        self._pending.append((iteration, t_write_ms, str(metrics or {})))
+        self._schema = df.schema
+        return read_state(self.spark, path, self.table_format, schema=df.schema)
 
-        reread = read_state(self.spark, path, self.table_format)
-        cols = [F.col(c) for c in reread.columns]
-        per_file = (
-            reread.groupBy(F.input_file_name().alias("file"))
+    # -------------------------------------------------------- lineage
+    def backfill_lineage(self, schema: StructType) -> None:
+        """Queue lineage rows, with null ``t_write_ms`` and ``metrics``,
+        for every completed iteration that has none: a run killed
+        before its :meth:`flush_lineage` wrote its states but not their
+        lineage."""
+        have: set[int] = set()
+        if self._exists(self._lineage_path):
+            have = {
+                r.iteration
+                for r in self.lineage().select("iteration").distinct().collect()
+            }
+        self._pending += [
+            (k, None, None) for k in self.completed_iterations() if k not in have
+        ]
+        self._schema = schema
+
+    def flush_lineage(self) -> None:
+        """Append the per-file rows (count plus order-insensitive
+        ``BIT_XOR(xxhash64(*))`` checksum) of every queued iteration to
+        ``<base>/_lineage``: one multi-path scan with the known schema,
+        grouped by ``input_file_name()``, the iteration parsed from the
+        file's ``iter_<k>`` directory and its write time and metrics
+        looked up from a literal map — one Spark job."""
+        from ..sources.storage import read_state
+
+        if not self._pending:
+            return
+        entries, self._pending = self._pending, []
+        states = read_state(
+            self.spark,
+            [self._iter_path(k) for k, _, _ in entries],
+            self.table_format,
+            schema=self._schema,
+        )
+        t_write = F.create_map(*(F.lit(x) for k, t, _ in entries for x in (k, t)))
+        metrics = F.create_map(*(F.lit(x) for k, _, m in entries for x in (k, m)))
+        it = F.col("iteration")
+        (
+            states.groupBy(F.input_file_name().alias("file"))
             .agg(
                 F.count("*").alias("rows"),
-                F.bit_xor(F.xxhash64(*cols)).alias("checksum"),
+                F.bit_xor(F.xxhash64(*states.columns)).alias("checksum"),
+            )
+            .withColumn(
+                "iteration",
+                F.regexp_extract("file", r".*/iter_(\d+)/", 1).cast("int"),
             )
             .select(
                 F.lit(self.run_id).alias("run_id"),
-                F.lit(iteration).alias("iteration"),
+                "iteration",
                 "file",
                 "rows",
                 "checksum",
-                F.lit(t_write_ms).alias("t_write_ms"),
+                t_write[it].cast("int").alias("t_write_ms"),
                 F.current_timestamp().alias("ts"),
-                F.lit(str(metrics or {})).alias("metrics"),
+                metrics[it].cast("string").alias("metrics"),
             )
+            .coalesce(1)
+            .write.mode("append")
+            .parquet(self._lineage_path)
         )
-        per_file.write.mode("append").parquet(f"{self.base_dir}/_lineage")
-        return reread
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.base_dir}/_lineage")
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage_path)
 
 
 def iterate(
@@ -266,41 +333,47 @@ def iterate(
     mgr = CheckpointManager(spark, checkpoint_dir, run_id) if checkpoint_dir else None
     k0 = 0
     state = state0
-    if mgr is not None:
-        got = mgr.latest()
-        if got is not None:
-            k0, state = got
-    if k0 == 0:
-        state = state.localCheckpoint(eager=True)
-
     done = False
-    k = k0
-    for k in range(k0 + 1, max_iter + 1):
-        new_state, metrics, obs = step(state, k)
+    try:
         if mgr is not None:
-            new_state = mgr.save(new_state, k, metrics)  # action: write
-        else:
-            # persist THEN eagerly localCheckpoint: one action total
-            # (the checkpoint job materializes through the cache and the
-            # Observation fires on it). The persist is load-bearing, not
-            # an optimization: Spark 4's localCheckpoint rewrites
-            # LogicalRDD stats from the source plan, and join-product
-            # sizeInBytes estimates COMPOUND across nested checkpoints
-            # (BigInt digits double per iteration -> minutes of driver
-            # CPU by iteration ~25); the InMemoryRelation in between
-            # caps the stats and resets that growth every iteration.
-            cached = new_state.persist()
-            new_state = cached.localCheckpoint(eager=True)
-            cached.unpersist()
-        obs_metrics = dict(obs.get) if obs is not None else {}
-        prev = state
-        state = new_state
-        # iteration k-1's blocks are garbage the moment k materialized
-        # (bounds storage at 2 states instead of growing with rounds)
-        release_local_checkpoint(prev)
-        if stop is not None and (
-            stop(obs_metrics, k, state) if stop_arity >= 3 else stop(obs_metrics, k)
-        ):
-            done = True
-            break
+            got = mgr.latest()
+            if got is not None:
+                k0, state = got
+                mgr.backfill_lineage(state.schema)
+        if k0 == 0:
+            state = state.localCheckpoint(eager=True)
+
+        k = k0
+        for k in range(k0 + 1, max_iter + 1):
+            new_state, metrics, obs = step(state, k)
+            if mgr is not None:
+                new_state = mgr.save(new_state, k, metrics)  # action: write
+            else:
+                # persist THEN eagerly localCheckpoint: one action total
+                # (the checkpoint job materializes through the cache and the
+                # Observation fires on it). The persist is load-bearing, not
+                # an optimization: Spark 4's localCheckpoint rewrites
+                # LogicalRDD stats from the source plan, and join-product
+                # sizeInBytes estimates COMPOUND across nested checkpoints
+                # (BigInt digits double per iteration -> minutes of driver
+                # CPU by iteration ~25); the InMemoryRelation in between
+                # caps the stats and resets that growth every iteration.
+                cached = new_state.persist()
+                new_state = cached.localCheckpoint(eager=True)
+                cached.unpersist()
+            obs_metrics = dict(obs.get) if obs is not None else {}
+            prev = state
+            state = new_state
+            # iteration k-1's blocks are garbage the moment k materialized
+            # (bounds storage at 2 states instead of growing with rounds)
+            release_local_checkpoint(prev)
+            if stop is not None and (
+                stop(obs_metrics, k, state) if stop_arity >= 3 else stop(obs_metrics, k)
+            ):
+                done = True
+                break
+    finally:
+        # convergence, max_iter and exceptions alike: one lineage pass
+        if mgr is not None:
+            mgr.flush_lineage()
     return state, k, done

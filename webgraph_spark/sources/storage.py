@@ -18,6 +18,8 @@ complete iff the ``metadata`` directory holds a committed snapshot —
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, SparkSession
 
 _ICEBERG_CLASS = "org.apache.iceberg.spark.source.IcebergSource"
@@ -47,11 +49,24 @@ def write_state(df: DataFrame, path: str, fmt: str | None = None) -> str:
     return fmt
 
 
-def read_state(spark: SparkSession, path: str, fmt: str | None = None) -> DataFrame:
+def read_state(
+    spark: SparkSession, path: str | list[str], fmt: str | None = None, schema=None
+) -> DataFrame:
+    """Read a durable state artifact, or several of one schema as one
+    frame when ``path`` is a list (a single multi-path scan for
+    parquet). A known ``schema`` (e.g. that of the frame just written)
+    skips parquet schema inference, which costs a footer-reading Spark
+    job per read; Iceberg reads the schema from its table metadata and
+    ignores it."""
     fmt = fmt or preferred_format(spark)
+    paths = [path] if isinstance(path, str) else list(path)
     if fmt == "iceberg":
-        return spark.read.format("iceberg").load(path)
-    return spark.read.parquet(path)
+        return reduce(
+            DataFrame.unionByName,
+            (spark.read.format("iceberg").load(p) for p in paths),
+        )
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
 
 
 def state_complete(fs, Path, path: str, fmt: str) -> bool:
