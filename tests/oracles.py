@@ -50,6 +50,27 @@ def pagerank_numpy_fixed(
     return r
 
 
+def bfs_numpy(adj: np.ndarray, s: int, max_depth: int | None = None) -> np.ndarray:
+    """Level-synchronous BFS distances from ``s`` over the boolean
+    adjacency ``adj`` (arc u -> v when adj[u, v]); -1 when unreached
+    (within ``max_depth`` levels, when given)."""
+    n = adj.shape[0]
+    dist = np.full(n, -1, dtype=np.int64)
+    dist[s] = 0
+    frontier = [s]
+    d = 0
+    while frontier and (max_depth is None or d < max_depth):
+        d += 1
+        nxt = []
+        for u in frontier:
+            for v in np.nonzero(adj[u])[0]:
+                if dist[v] < 0:
+                    dist[v] = d
+                    nxt.append(int(v))
+        frontier = nxt
+    return dist
+
+
 def connected_components_numpy(adj: np.ndarray) -> np.ndarray:
     """Components of the symmetrized graph via union-find (no scipy in
     this container); labels are the min node id of each component —

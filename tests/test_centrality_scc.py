@@ -22,23 +22,7 @@ from webgraph_spark.datagen.graphs import (
     two_cliques_bridge,
 )
 
-
-def _bfs_numpy(adj: np.ndarray, s: int) -> np.ndarray:
-    n = adj.shape[0]
-    dist = np.full(n, -1)
-    dist[s] = 0
-    frontier = [s]
-    d = 0
-    while frontier:
-        d += 1
-        nxt = []
-        for v in frontier:
-            for w in np.nonzero(adj[v])[0]:
-                if dist[w] == -1:
-                    dist[w] = d
-                    nxt.append(int(w))
-        frontier = nxt
-    return dist
+from .oracles import bfs_numpy
 
 
 def test_multi_source_bfs_vs_numpy(spark):
@@ -51,7 +35,7 @@ def test_multi_source_bfs_vs_numpy(spark):
         for r in multi_source_bfs(g, sources).collect()
     }
     for s in sources:
-        dist = _bfs_numpy(adj, s)
+        dist = bfs_numpy(adj, s)
         want = {(s, v): int(dist[v]) for v in range(n) if dist[v] >= 0}
         got_s = {k: v for k, v in got.items() if k[0] == s}
         assert got_s == want, f"source {s}"

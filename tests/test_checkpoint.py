@@ -121,7 +121,7 @@ def test_lineage_backfilled_after_kill(spark, tmp_path, monkeypatch):
         pagerank(g, fixed_iterations=2, checkpoint_dir=ckpt)
     mgr = CheckpointManager(spark, ckpt)
     assert mgr.completed_iterations() == [1, 2]
-    assert not os.path.exists(ckpt + "/_lineage")
+    assert not os.path.exists(ckpt + "/lineage")
 
     pagerank(g, fixed_iterations=4, checkpoint_dir=ckpt)
     flushed = _flushed_lineage(mgr)
@@ -135,6 +135,19 @@ def test_lineage_backfilled_after_kill(spark, tmp_path, monkeypatch):
     # resuming a finished run writes no further lineage
     pagerank(g, fixed_iterations=4, checkpoint_dir=ckpt)
     assert _flushed_lineage(mgr) == flushed
+
+
+def test_lineage_under_old_hidden_name_is_backfilled(spark, tmp_path):
+    """A directory whose lineage table was written as ``_lineage`` (a
+    name Spark's file listing hides) still resumes: its iterations are
+    backfilled into ``lineage``."""
+    g = erdos_renyi(spark, 30, 0.1, seed=41)
+    ckpt = str(tmp_path / "pr")
+    pagerank(g, fixed_iterations=2, checkpoint_dir=ckpt)
+    os.rename(ckpt + "/lineage", ckpt + "/_lineage")
+    pagerank(g, fixed_iterations=3, checkpoint_dir=ckpt)
+    mgr = CheckpointManager(spark, ckpt)
+    assert _flushed_lineage(mgr) == _direct_lineage(spark, ckpt, [1, 2, 3])
 
 
 def test_durable_pagerank_adds_at_most_two_jobs(spark, tmp_path):

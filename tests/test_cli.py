@@ -239,7 +239,7 @@ def test_pagerank_checkpoint_lineage(spark, edges_path, tmp_path, capsys):
     ck = str(tmp_path / "ck")
     assert main(["pagerank", "-i", edges_path, "--checkpoint-dir", ck]) == 0
     assert _json_lines(capsys)[-1]["converged"] is True
-    lineage = spark.read.parquet(ck + "/_lineage")
+    lineage = spark.read.parquet(ck + "/lineage")
     assert lineage.count() > 0  # per-iteration durable lineage rows
 
 

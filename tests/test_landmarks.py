@@ -10,27 +10,13 @@ from webgraph_spark.algos.landmarks import (
 )
 from webgraph_spark.datagen.graphs import erdos_renyi_numpy
 
+from .oracles import bfs_numpy
+
 
 def _sym_noloop(adj):
     s = adj | adj.T
     np.fill_diagonal(s, False)
     return s
-
-
-def _bfs_np(s, src, max_depth):
-    n = s.shape[0]
-    dist = np.full(n, -1)
-    dist[src] = 0
-    frontier = [src]
-    for d in range(1, max_depth + 1):
-        nxt = []
-        for u in frontier:
-            for v in np.nonzero(s[u])[0]:
-                if dist[v] < 0:
-                    dist[v] = d
-                    nxt.append(v)
-        frontier = nxt
-    return dist
 
 
 def _np_landmarks(s, n_landmarks):
@@ -51,7 +37,7 @@ def test_landmark_sketch_vs_numpy(spark, n, p, seed):
 
     sk = landmark_sketch(edges, n_landmarks=3, max_depth=4)
     got = {r["node"]: (r["d0"], r["d1"], r["d2"]) for r in sk.collect()}
-    want = [_bfs_np(s, l, 4) for l in lms]
+    want = [bfs_numpy(s, l, 4) for l in lms]
     nodes = set(int(u) for u, v in rows) | set(int(v) for u, v in rows)
     assert set(got) == nodes
     for v in nodes:
@@ -68,7 +54,7 @@ def test_estimate_distances_is_admissible_upper_bound(spark):
     sk = landmark_sketch(edges, n_landmarks=4, max_depth=6)
 
     nodes = sorted(set(int(u) for u, v in rows) | set(int(v) for u, v in rows))
-    full = {v: _bfs_np(s, v, 50) for v in nodes}
+    full = {v: bfs_numpy(s, v, 50) for v in nodes}
     pairs = [(u, v) for u in nodes[:8] for v in nodes[-8:] if u != v]
     pdf = spark.createDataFrame(pairs, "u long, v long")
     est = {

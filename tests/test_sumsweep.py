@@ -15,23 +15,7 @@ from webgraph_spark.datagen.graphs import (
     two_cliques_bridge,
 )
 
-
-def _bfs_dists(adj: np.ndarray, s: int) -> np.ndarray:
-    n = adj.shape[0]
-    dist = np.full(n, -1, dtype=np.int64)
-    dist[s] = 0
-    frontier = [s]
-    d = 0
-    while frontier:
-        d += 1
-        nxt = []
-        for u in frontier:
-            for v in np.nonzero(adj[u])[0]:
-                if dist[v] < 0:
-                    dist[v] = d
-                    nxt.append(int(v))
-        frontier = nxt
-    return dist
+from .oracles import bfs_numpy
 
 
 def _diam_radius_numpy(adj: np.ndarray) -> tuple[int, int]:
@@ -40,7 +24,7 @@ def _diam_radius_numpy(adj: np.ndarray) -> tuple[int, int]:
     present = adj.any(axis=1) | adj.any(axis=0)
     eccs = []
     for s in np.nonzero(present)[0]:
-        d = _bfs_dists(adj, int(s))
+        d = bfs_numpy(adj, int(s))
         eccs.append(d[d >= 0].max())
     return int(max(eccs)), int(min(eccs))
 

@@ -23,7 +23,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.iterate import release_local_checkpoint
+from ..plans.iterate import eager_checkpoint, release_local_checkpoint
 
 
 def betweenness_numpy(edges_rows: list[tuple[int, int]], n: int) -> np.ndarray:
@@ -100,12 +100,6 @@ def betweenness(
         .distinct()
     )
 
-    def ckpt(df):
-        cached = df.persist()
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
-
     if sources is None:
         src_df = nodes
     elif isinstance(sources, list):
@@ -114,7 +108,7 @@ def betweenness(
         src_df = sources.select(F.col(sources.columns[0]).alias("node"))
 
     # ---- forward: dist + sigma per (source, node)
-    visited = ckpt(
+    visited = eager_checkpoint(
         src_df.select(
             F.col("node").alias("source"),
             "node",
@@ -133,7 +127,7 @@ def betweenness(
             .groupBy("source", F.col("dst").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
         )
-        nxt = ckpt(
+        nxt = eager_checkpoint(
             expanded.join(
                 visited.select("source", "node"), ["source", "node"], "left_anti"
             ).select("source", "node", F.lit(d).alias("dist"), "sigma")
@@ -141,7 +135,7 @@ def betweenness(
         if nxt.isEmpty():
             break
         prev_visited, prev_frontier = visited, frontier
-        visited = ckpt(visited.unionByName(nxt))
+        visited = eager_checkpoint(visited.unionByName(nxt))
         frontier = nxt
         # level d-1's frames are garbage once level d materialized
         release_local_checkpoint(prev_visited)
@@ -153,7 +147,7 @@ def betweenness(
     # delta rows exist for every visited pair; start at 0
     deltas = {}  # level -> DataFrame(source, node, sigma, delta)
     lvl = visited.select("source", "node", "dist", "sigma")
-    deltas[max_d] = ckpt(
+    deltas[max_d] = eager_checkpoint(
         lvl.where(F.col("dist") == max_d).select(
             "source", "node", "sigma", F.lit(0.0).alias("delta")
         )
@@ -178,7 +172,7 @@ def betweenness(
             .groupBy("source", "node")
             .agg(F.sum("w_term").alias("t"))
         )
-        deltas[dd - 1] = ckpt(
+        deltas[dd - 1] = eager_checkpoint(
             v_level.join(contrib, ["source", "node"], "left").select(
                 "source",
                 "node",
@@ -198,7 +192,7 @@ def betweenness(
     result = nodes.join(out, "node", "left").select(
         "node", F.coalesce("betweenness", F.lit(0.0)).alias("betweenness")
     )
-    result = ckpt(result)
+    result = eager_checkpoint(result)
     e.unpersist()
     return result
 

@@ -5,8 +5,9 @@ harmonic / Lin / exponential centralities by per-source BFS over a
 thread pool; SampleDistanceCumulativeDistributionFunction.java:25-32
 samples sources for the distance CDF. The Spark shape batches all
 sources into ONE frontier DataFrame keyed by (source, node): each
-round expands every source's frontier simultaneously — n_sources
-parallel BFS for the price of one shuffle per level.
+level expands every source's frontier simultaneously — n_sources
+parallel BFS for the price of one shuffle and ONE Spark job per level
+(the keyed frontier kernel of algos/bfs.py, on plans.iterate).
 
 Exact and all-pairs at fixture scale; at corpus scale use sampled
 sources (distance CDF) or HyperBall (algos/hyperball.py) — the same
@@ -18,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.iterate import release_local_checkpoint
+from .bfs import _frontier_bfs
 
 
 def multi_source_bfs(
@@ -31,40 +32,11 @@ def multi_source_bfs(
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = edges.select("src", "dst").distinct().repartition(num_partitions, "src").persist()
     if isinstance(sources, list):
         sources = spark.createDataFrame([(int(s),) for s in sources], "source long")
-    frontier = sources.select("source", F.col("source").alias("node")).distinct()
-    visited = frontier.select("source", "node", F.lit(0).alias("dist"))
-    visited = visited.localCheckpoint(eager=True)
-    frontier = visited.select("source", "node")
-
-    for rounds in range(1, max_rounds + 1):
-        nxt = (
-            e.join(frontier.withColumnRenamed("node", "src"), "src")
-            .select("source", F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("source", "node"), ["source", "node"], "left_anti")
-        )
-        nxt = nxt.persist()
-        nxt_ck = nxt.localCheckpoint(eager=True)
-        nxt.unpersist()
-        if nxt_ck.isEmpty():
-            break
-        grown = visited.unionByName(
-            nxt_ck.select("source", "node", F.lit(rounds).alias("dist"))
-        ).persist()
-        new_visited = grown.localCheckpoint(eager=True)
-        grown.unpersist()
-        # round k-1's visited/frontier blocks are garbage once the new
-        # visited materialized (both are plan-cut LogicalRDDs); release
-        # deterministically instead of growing storage O(rounds * n)
-        release_local_checkpoint(visited)
-        release_local_checkpoint(frontier)
-        visited = new_visited
-        frontier = nxt_ck
-    e.unpersist()
-    return visited
+    seeds = sources.select("source", F.col("source").alias("node"))
+    arcs = edges.select("src", "dst").distinct()
+    return _frontier_bfs(arcs, seeds, ["source"], max_rounds, num_partitions).distances
 
 
 def geometric_centralities(

@@ -251,15 +251,11 @@ def hyperball(
         .repartition(num_partitions, "node")
     )
 
-    from ..plans.iterate import iteration_confs, release_local_checkpoint
-
-    # persist-then-localCheckpoint: see plans/iterate.py — the persist is
-    # load-bearing (caps Spark 4 LogicalRDD stats growth)
-    def _materialize(df: DataFrame) -> DataFrame:
-        cached = df.persist()
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
+    from ..plans.iterate import (
+        eager_checkpoint,
+        iteration_confs,
+        release_local_checkpoint,
+    )
 
     # NF sums accumulate in DECIMAL(38,9): exact, order-independent
     # addition of the rounded per-node summands. The reference compensates
@@ -268,7 +264,7 @@ def hyperball(
     # and starts losing low bits around 10^10 summands, decimal is exact.
     nf_sum = F.sum(F.col("est").cast("decimal(38,9)")).cast("double")
 
-    state = _materialize(state0)
+    state = eager_checkpoint(state0)
     nf = [float(state.agg(nf_sum).collect()[0][0])]
 
     # changed sets at most this many rows are broadcast for the message
@@ -330,8 +326,8 @@ def hyperball(
                 # enter delta mode: current state becomes the immutable
                 # base; overlay starts empty; exact NF total seeded once
                 base = state
-                last_upd = _materialize(state.where("chg").select(*row_cols))
-                overlay = _materialize(spark.createDataFrame([], overlay_schema))
+                last_upd = eager_checkpoint(state.where("chg").select(*row_cols))
+                overlay = eager_checkpoint(spark.createDataFrame([], overlay_schema))
                 overlay_n = 0
                 nf_dec = state.agg(
                     F.sum(F.col("est").cast(d38)).alias("nf")
@@ -411,7 +407,7 @@ def hyperball(
                 # partition count is the SUM of its inputs' — without the
                 # cap, overlay_t = keep_{t-1} U upd_t doubles the stored
                 # partition count every round (2^t tasks by round t)
-                upd = _materialize(
+                upd = eager_checkpoint(
                     upd_body.select(
                         "node",
                         *reg_cols,
@@ -436,7 +432,7 @@ def hyperball(
                         .observe(obs2, F.count(F.lit(1)).alias("n"))
                     )
                     prev_overlay = overlay
-                    overlay = _materialize(new_overlay.coalesce(num_partitions))
+                    overlay = eager_checkpoint(new_overlay.coalesce(num_partitions))
                     release_local_checkpoint(prev_overlay)
                     overlay_n = int(obs2.get.get("n"))
                     nf_dec = nf_dec + (got.get("dnf") or Decimal(0))
@@ -476,7 +472,7 @@ def hyperball(
                         .repartition(num_partitions, "node")
                     )
                     prev = [base, overlay, last_upd]
-                    state = _materialize(dense)
+                    state = eager_checkpoint(dense)
                     for df in prev:
                         release_local_checkpoint(df)
                     base = overlay = last_upd = None
@@ -485,12 +481,12 @@ def hyperball(
                     # compact: one full rewrite, then the overlay restarts
                     # empty (last_upd survives — next round's messages)
                     prev = [base, overlay]
-                    base = _materialize(
+                    base = eager_checkpoint(
                         _compacted().repartition(num_partitions, "node")
                     )
                     for df in prev:
                         release_local_checkpoint(df)
-                    overlay = _materialize(
+                    overlay = eager_checkpoint(
                         spark.createDataFrame([], overlay_schema)
                     )
                     overlay_n = 0
@@ -536,7 +532,7 @@ def hyperball(
                 nf_sum.alias("nf"),
             )
             prev_state = state
-            state = _materialize(new_state)
+            state = eager_checkpoint(new_state)
             # round t-1's register blocks are garbage once round t is
             # materialized; without this, storage grows linearly in t
             release_local_checkpoint(prev_state)
@@ -557,7 +553,7 @@ def hyperball(
             nf.append(float(got.get("nf")))
 
     if delta_mode:
-        final = _materialize(_compacted())
+        final = eager_checkpoint(_compacted())
         for df in (base, overlay, last_upd):
             release_local_checkpoint(df)
         state = final
@@ -695,19 +691,17 @@ def hyperball_wide(
             F.sum(rtp).alias("rt"),
         )
 
-    from ..plans.iterate import iteration_confs, release_local_checkpoint
-
-    def _materialize(df: DataFrame) -> DataFrame:
-        cached = df.persist()
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
+    from ..plans.iterate import (
+        eager_checkpoint,
+        iteration_confs,
+        release_local_checkpoint,
+    )
 
     d38 = "decimal(38,9)"
     nf_sum = F.sum(F.col("est").cast(d38)).cast("double")
 
-    regs = _materialize(regs0)
-    accs = _materialize(
+    regs = eager_checkpoint(regs0)
+    accs = eager_checkpoint(
         _per_node(regs).select(
             "node",
             _est_from(F.col("zs"), F.col("nnz")).alias("est"),
@@ -759,7 +753,7 @@ def hyperball_wide(
                 *[F.greatest(F.col(c), F.col(f"m_{c}")).alias(c) for c in reg_cols],
             )
             prev_regs = regs
-            regs = _materialize(merged)
+            regs = eager_checkpoint(merged)
             release_local_checkpoint(prev_regs)
 
             est_new = _est_from(F.col("zs"), F.col("nnz"))
@@ -791,7 +785,7 @@ def hyperball_wide(
                 )
             )
             prev_accs = accs
-            accs = _materialize(new_accs)
+            accs = eager_checkpoint(new_accs)
             release_local_checkpoint(prev_accs)
             got = obs.get
             n_changed = int(got.get("nchg"))

@@ -24,14 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.transforms import simplify
-from ..plans.iterate import release_local_checkpoint
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    cached = df.persist()
-    out = cached.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
+from ..plans.iterate import eager_checkpoint, release_local_checkpoint
 
 
 def kcore(
@@ -51,7 +44,7 @@ def kcore(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    cur = _materialize(
+    cur = eager_checkpoint(
         simplify(edges).repartition(num_partitions, "src")
     )
     n_edges = cur.count()
@@ -60,7 +53,7 @@ def kcore(
             break
         deg = cur.groupBy("src").agg(F.count("*").alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("src")
-        nxt = _materialize(
+        nxt = eager_checkpoint(
             cur.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")
@@ -125,8 +118,8 @@ def coreness(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    sym = _materialize(simplify(edges).repartition(num_partitions, "dst"))
-    c = _materialize(
+    sym = eager_checkpoint(simplify(edges).repartition(num_partitions, "dst"))
+    c = eager_checkpoint(
         sym.groupBy("src").agg(F.count("*").alias("c"))
         .select(F.col("src").alias("node"), "c")
     )
@@ -143,7 +136,7 @@ def coreness(
                 F.sum(F.when(F.col("v") >= F.col("_r"), 1).otherwise(0)).alias("c2")
             )
         )
-        nxt = _materialize(
+        nxt = eager_checkpoint(
             c.join(h, "node", "left").select(
                 "node", F.coalesce("c2", F.lit(0)).cast("long").alias("c")
             )
@@ -212,7 +205,7 @@ def onion_layers(
     spark = edges.sparkSession
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    cur = _materialize(
+    cur = eager_checkpoint(
         simplify(edges).repartition(num_partitions, "src")
     )
     out_frames = []
@@ -230,9 +223,9 @@ def onion_layers(
             F.lit(layer).cast("long").alias("layer"),
             F.lit(k).cast("long").alias("coreness"),
         )
-        out_frames.append(_materialize(rm))
+        out_frames.append(eager_checkpoint(rm))
         keep = deg.where(F.col("deg") > k).select("src")
-        nxt = _materialize(
+        nxt = eager_checkpoint(
             cur.join(keep, "src", "left_semi")
             .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
             .select("src", "dst")

@@ -19,12 +19,16 @@ estimate is a row-local array expression — no shuffle at query time.
 
 Scale shape — BITMASK frontier, not per-source rows: all L <= 62
 landmark BFS waves share ONE state row per node (seen mask + distance
-array), the same packed-state trick as HyperBall's register file.
-Per round: one co-partitioned edges-frontier join, one groupBy(node)
-``bit_or`` with MAP-SIDE COMBINE (a hub receiving 10^6 messages
-collapses to one long per map task), one state join. State is O(n)
-longs + one L-int array — NOT O(L*n) rows; messages are O(adjacent
-arcs of changed nodes), and the frontier shrinks to saturation.
+array + the mask of waves that reached it last round), the same
+packed-state trick as HyperBall's register file. Per round, on
+``plans.iterate.iterate`` and in ONE Spark job: one co-partitioned
+edges-frontier join (the frontier is ``newly != 0``), one
+groupBy(node) ``bit_or`` with MAP-SIDE COMBINE (a hub receiving 10^6
+messages collapses to one long per map task), one state join; the
+frontier size rides on that job as an ``Observation`` and the loop
+stops when it is 0. State is O(n) longs + one L-int array — NOT O(L*n)
+rows; messages are O(adjacent arcs of changed nodes), and the frontier
+shrinks to saturation.
 (The first implementation tracked (source, node) pairs: 16x the state
 rows and 871 s at 31.5M edges / 16 landmarks; the bitmask plan is the
 one you'd run at 100 TB.)
@@ -32,10 +36,10 @@ one you'd run at 100 TB.)
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from ..operators.transforms import no_loops, symmetrize
-from ..plans.iterate import release_local_checkpoint
+from ..plans.iterate import iterate, iteration_confs
 
 MAX_LANDMARKS = 62  # mask lives in one signed long
 
@@ -80,27 +84,27 @@ def landmark_sketch(
     )
 
     L = n_landmarks
-    init = [
-        (
-            int(node),
-            sum(1 << i for i, l in enumerate(lms) if l == node),
-            [0 if lms[i] == node else None for i in range(L)],
-        )
-        for node in sorted(set(lms))
-    ]
-    state = spark.createDataFrame(
-        init, f"node long, seen long, ds array<int>"
+    init = []
+    for node in sorted(set(lms)):
+        # a graph with fewer than L non-loop nodes has fewer landmarks:
+        # the missing ones reach nothing (null distances)
+        mask = sum(1 << i for i, l in enumerate(lms) if l == node)
+        ds = [0 if i < len(lms) and lms[i] == node else None for i in range(L)]
+        init.append((int(node), mask, ds, mask))
+    state0 = spark.createDataFrame(
+        init, "node long, seen long, ds array<int>, newly long"
     )
-    state = state.localCheckpoint(eager=True)
-    frontier = state.select("node", F.col("seen").alias("mask"))
 
-    for rnd in range(1, max_depth + 1):
+    def step(state: DataFrame, rnd: int):
+        frontier = state.where(F.col("newly") != 0).select(
+            F.col("node").alias("src"), F.col("newly").alias("mask")
+        )
         msgs = (
-            sym.join(frontier.withColumnRenamed("node", "src"), "src")
+            sym.join(frontier, "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.bit_or("mask").alias("msg"))
         )
-        joined = msgs.join(state, "node", "full_outer").select(
+        joined = msgs.join(state.drop("newly"), "node", "full_outer").select(
             "node",
             F.coalesce("seen", F.lit(0)).alias("seen"),
             "ds",
@@ -108,6 +112,7 @@ def landmark_sketch(
             .bitwiseAND(F.bitwise_not(F.coalesce("seen", F.lit(0))))
             .alias("newly"),
         )
+        obs = Observation()
         grown = joined.select(
             "node",
             F.col("seen").bitwiseOR(F.col("newly")).alias("seen"),
@@ -121,21 +126,13 @@ def landmark_sketch(
                 ]
             ).alias("ds"),
             "newly",
-        ).persist()
-        new_state = grown.select("node", "seen", "ds").localCheckpoint(
-            eager=True
-        )
-        nxt = grown.where(F.col("newly") != 0).select(
-            "node", F.col("newly").alias("mask")
-        )
-        nxt_ck = nxt.localCheckpoint(eager=True)
-        grown.unpersist()
-        release_local_checkpoint(state)
-        state = new_state
-        frontier = nxt_ck
-        if frontier.isEmpty():
-            break
+        ).observe(obs, F.sum((F.col("newly") != 0).cast("long")).alias("frontier"))
+        return grown, {}, obs
 
+    with iteration_confs(spark, {"spark.sql.shuffle.partitions": str(num_partitions)}):
+        state, _, _ = iterate(
+            spark, state0, step, max_depth, stop=lambda m, k: not m.get("frontier")
+        )
     sym.unpersist()
     nodes = (
         edges.select(F.col("src").alias("node"))

@@ -28,7 +28,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.iterate import iterate, iteration_confs
+from ..plans.iterate import eager_checkpoint, iterate, iteration_confs
 
 
 @dataclass
@@ -201,7 +201,9 @@ def temporal_reachability(
     min over arcs (u, v, t) with t >= arrival_k(u) of t)``. Sources
     start at arrival LONG_MIN (any arc usable). Every round is one
     co-partitioned join + one min-aggregation over int64 timestamps —
-    exact, no float contract — and rounds past the fixpoint are no-ops,
+    exact, no float contract — run as ONE Spark job on
+    :func:`plans.iterate.iterate`, the changed-row count observed on the
+    state write (``sssp``'s stop rule); rounds past the fixpoint are no-ops,
     so a fixed schedule that reaches it returns the exact fixpoint (the
     unrolled-SQL oracle contract; ``fixed_rounds`` pins it). Returns
     ``(node, arrival)`` for every temporally reachable node.
@@ -210,60 +212,59 @@ def temporal_reachability(
     if num_partitions is None:
         num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     LONG_MIN = -(1 << 62)
-
-    from ..plans.iterate import (
-        eager_checkpoint,
-        iteration_confs,
-        release_local_checkpoint,
+    LONG_INF = 1 << 62
+    state0 = spark.createDataFrame(
+        [(s, LONG_MIN) for s in dict.fromkeys(int(s) for s in sources)],
+        "node long, arrival long",
     )
+
+    def step(state, k):
+        from pyspark.sql import Observation
+
+        msgs = (
+            e.join(
+                state.select(
+                    F.col("node").alias("src"), F.col("arrival").alias("_a")
+                ).hint("shuffle_hash"),
+                "src",
+            )
+            .where(F.col("t") >= F.col("_a"))
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("t").alias("_m"))
+        )
+        obs = Observation()
+        new_state = (
+            state.join(msgs, "node", "full_outer")
+            .select(
+                "node",
+                F.least(
+                    F.coalesce("arrival", F.lit(LONG_INF)),
+                    F.coalesce("_m", F.lit(LONG_INF)),
+                ).alias("arrival"),
+                F.col("arrival").alias("_old"),
+            )
+            .observe(
+                obs,
+                F.sum(
+                    (F.col("_old").isNull() | (F.col("arrival") < F.col("_old")))
+                    .cast("long")
+                ).alias("nchg"),
+            )
+            .select("node", "arrival")
+        )
+        return new_state, {}, obs
+
+    if fixed_rounds is not None:
+        max_iter, stop = fixed_rounds, None
+    else:
+        max_iter, stop = max_rounds, (lambda m, k: not m.get("nchg"))
 
     with iteration_confs(spark):
         e = eager_checkpoint(
             arcs.select("src", "dst", F.col("t").cast("long").alias("t"))
             .repartition(num_partitions, "src")
         )
-        state = spark.createDataFrame(
-            [(int(s), LONG_MIN) for s in sources], "node long, arrival long"
-        )
-        rounds = fixed_rounds if fixed_rounds is not None else max_rounds
-        for _ in range(rounds):
-            msgs = (
-                e.join(
-                    state.select(
-                        F.col("node").alias("src"), F.col("arrival").alias("_a")
-                    ).hint("shuffle_hash"),
-                    "src",
-                )
-                .where(F.col("t") >= F.col("_a"))
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min("t").alias("_m"))
-            )
-            new_state = eager_checkpoint(
-                state.join(msgs, "node", "full_outer").select(
-                    "node",
-                    F.least(
-                        F.coalesce("arrival", F.lit(1 << 62)),
-                        F.coalesce("_m", F.lit(1 << 62)),
-                    ).alias("arrival"),
-                )
-            )
-            if fixed_rounds is None:
-                changed = (
-                    new_state.alias("n")
-                    .join(state.alias("o"), "node", "left")
-                    .where(
-                        F.col("o.arrival").isNull()
-                        | (F.col("n.arrival") < F.col("o.arrival"))
-                    )
-                    .limit(1)
-                    .count()
-                )
-                if changed == 0:
-                    release_local_checkpoint(state)
-                    state = new_state
-                    break
-            release_local_checkpoint(state)
-            state = new_state
+        state, _, _ = iterate(spark, state0, step, max_iter, stop=stop)
     return state
 
 

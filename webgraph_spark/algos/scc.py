@@ -16,12 +16,24 @@ distributed core. Two implementations are provided:
   backward BFS keyed by color, restricted to same-color nodes, from
   every pivot at once. Expected O(log n) outer rounds; thousands of
   small SCCs peel together instead of one pivot per round.
+
+Every inner loop runs one Spark job per step: a trim step and a color
+step each materialize one checkpoint with their count observed on it,
+and the backward sweep is the keyed frontier kernel of algos/bfs.py on
+``plans.iterate.iterate`` (one job per BFS level).
 """
 
 from __future__ import annotations
 
 import numpy as np
 from pyspark.sql import DataFrame, Observation, functions as F
+
+from ..plans.iterate import (
+    eager_checkpoint,
+    iteration_confs,
+    release_local_checkpoint,
+)
+from .bfs import _frontier_bfs
 
 
 def scc_numpy(edges_rows: list[tuple[int, int]], n: int) -> np.ndarray:
@@ -86,13 +98,6 @@ def scc_components_spark_oracle(edges: DataFrame) -> dict[int, int]:
     return {v: int(comp[remap[v]]) for v in nodes}
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    cached = df.persist()
-    out = cached.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
-
-
 def scc_coloring(
     edges: DataFrame, max_rounds: int = 50, max_inner: int = 10_000
 ) -> DataFrame:
@@ -101,20 +106,20 @@ def scc_coloring(
     ``max_rounds`` outer rounds exhaust before every node is assigned
     (a silently partial labeling is never returned)."""
     spark = edges.sparkSession
-    from ..plans.iterate import iteration_confs, release_local_checkpoint
+    num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
     def _swap(new_df: DataFrame, old: DataFrame) -> DataFrame:
         """Checkpoint the successor state, then free the predecessor's
         blocks — the trim/color/BFS loops below can run O(n) iterations
         (layer-peeling on path-like DAGs), so retaining every round's
         checkpoint grows storage linearly in rounds."""
-        out = _ckpt(new_df)
+        out = eager_checkpoint(new_df)
         release_local_checkpoint(old)
         return out
 
-    e_all = _ckpt(edges.select("src", "dst").distinct())
+    e_all = eager_checkpoint(edges.select("src", "dst").distinct())
     remaining = e_all
-    live = _ckpt(
+    live = eager_checkpoint(
         e_all.select(F.col("src").alias("node"))
         .unionByName(e_all.select(F.col("dst").alias("node")))
         .distinct()
@@ -141,13 +146,15 @@ def scc_coloring(
             while True:
                 srcs = remaining.select(F.col("src").alias("node")).distinct()
                 dsts = remaining.select(F.col("dst").alias("node")).distinct()
-                trivial = _ckpt(
+                obs = Observation()
+                trivial = eager_checkpoint(
                     live.join(srcs, "node", "left_anti")
                     .unionByName(live.join(dsts, "node", "left_anti"))
                     .distinct()
                     .select("node", F.col("node").alias("scc"))
+                    .observe(obs, F.count(F.lit(1)).alias("n"))
                 )
-                if trivial.isEmpty():
+                if obs.get["n"] == 0:
                     break
                 assigned = _swap(assigned.unionByName(trivial), assigned)
                 drop_assigned(trivial)
@@ -158,7 +165,7 @@ def scc_coloring(
             # ---- 2) color every node with the max node id that reaches
             # it (forward max-propagation to fixpoint, changed-count as
             # an Observation on the materializing action)
-            colors = _ckpt(live.select("node", F.col("node").alias("color")))
+            colors = eager_checkpoint(live.select("node", F.col("node").alias("color")))
             for _k in range(max_inner):
                 msgs = (
                     remaining.join(
@@ -192,41 +199,31 @@ def scc_coloring(
 
             # ---- 3) one batched backward BFS from ALL pivots at once
             # (pivot of color class c is node c itself), restricted to
-            # same-color nodes: SCC(c) = {v : color(v)=c, v reaches c}
-            rev = remaining.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
+            # same-color nodes: SCC(c) = {v : color(v)=c, v reaches c}.
+            # Keyed by color over the reversed arcs whose two ends share
+            # a color (valid: any node on a backward path from a color-c
+            # node to c is in SCC(c), and every frontier node carries
+            # its key's color)
+            c_src = colors.select(F.col("node").alias("src"), "color")
+            c_dst = colors.select(
+                F.col("node").alias("dst"), F.col("color").alias("c2")
             )
-            frontier = _ckpt(
-                colors.where(F.col("node") == F.col("color")).select("color", "node")
+            rev = (
+                remaining.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+                .join(c_src, "src")
+                .join(c_dst, "dst")
+                .where(F.col("c2") == F.col("color"))
+                .select("color", "src", "dst")
             )
-            visited = frontier
-            for _k in range(max_inner):
-                nxt = _ckpt(
-                    rev.join(frontier.withColumnRenamed("node", "src"), "src")
-                    .select("color", F.col("dst").alias("node"))
-                    .distinct()
-                    # stay inside the color class (valid: any node on a
-                    # backward path from a color-c node to c is in SCC(c))
-                    .join(colors.withColumnRenamed("color", "c2"), "node")
-                    .where(F.col("c2") == F.col("color"))
-                    .select("color", "node")
-                    .join(visited, ["color", "node"], "left_anti")
-                )
-                if nxt.isEmpty():
-                    break
-                prev_visited, prev_frontier = visited, frontier
-                visited = _ckpt(visited.unionByName(nxt))
-                frontier = nxt
-                release_local_checkpoint(prev_visited)
-                if prev_frontier is not prev_visited:
-                    release_local_checkpoint(prev_frontier)
-            sccs = _swap(visited.select("node", F.col("color").alias("scc")), visited)
+            pivots = colors.where(F.col("node") == F.col("color"))
+            visited = _frontier_bfs(
+                rev, pivots, ["color"], max_inner, num_partitions
+            ).distances
             release_local_checkpoint(colors)
-            if frontier is not visited:
-                release_local_checkpoint(frontier)
+            sccs = visited.select("node", F.col("color").alias("scc"))
             assigned = _swap(assigned.unionByName(sccs), assigned)
             drop_assigned(sccs)
-            release_local_checkpoint(sccs)
+            release_local_checkpoint(visited)
 
     if not live.isEmpty():
         raise RuntimeError(

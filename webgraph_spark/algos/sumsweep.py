@@ -36,7 +36,11 @@ from pyspark.sql import DataFrame, functions as F
 
 from .bfs import bfs
 from ..operators.transforms import symmetrize, transpose
-from ..plans.iterate import iteration_confs, release_local_checkpoint
+from ..plans.iterate import (
+    eager_checkpoint,
+    iteration_confs,
+    release_local_checkpoint,
+)
 
 
 @dataclass
@@ -225,7 +229,7 @@ def _sum_sweep_directed(
         exact_map = F.create_map(
             *[F.lit(x) for kv in exact_ecc.items() for x in kv]
         )
-        newb = (
+        newb = eager_checkpoint(
             bounds.join(dB.withColumnRenamed("dist", "dvw"), "node", "left")
             .select(
                 "node",
@@ -241,14 +245,12 @@ def _sum_sweep_directed(
                     ).otherwise(F.col("ubF")),
                 ).alias("ubF"),
             )
-        ).persist()
-        newb_ck = newb.localCheckpoint(eager=True)
-        newb.unpersist()
+        )
         # sweep k-1's bound frame is garbage once sweep k materialized;
         # the loop can run O(n) sweeps (cycle-like graphs), so retained
         # checkpoints would grow storage linearly in sweeps
         release_local_checkpoint(bounds)
-        bounds = newb_ck
+        bounds = newb
 
         if strongly_connected:
             # diameter certified when no node's upper bound exceeds L

@@ -43,7 +43,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..plans.iterate import release_local_checkpoint
+from ..plans.iterate import eager_checkpoint, release_local_checkpoint
 
 
 @dataclass
@@ -205,12 +205,6 @@ def top_k_geometric(
         if len(heap) == k:
             kth = heap[0][0]
 
-    def ckpt(df):
-        cached = df.persist()
-        out = cached.localCheckpoint(eager=True)
-        cached.unpersist()
-        return out
-
     for b in range(n_batches):
         bsel = batched.where(F.col("batch") == b)
         if bounds is not None:
@@ -235,12 +229,14 @@ def top_k_geometric(
         src_df = spark.createDataFrame(
             [(int(v),) for v in batch_nodes], "source long"
         )
-        frontier = ckpt(src_df.select("source", F.col("source").alias("node")))
+        frontier = eager_checkpoint(
+            src_df.select("source", F.col("source").alias("node"))
+        )
         visited = frontier
         d = 0
         while active and d < max_rounds:
             d += 1
-            nxt = ckpt(
+            nxt = eager_checkpoint(
                 e.join(frontier.withColumnRenamed("node", "src"), "src")
                 .select("source", F.col("dst").alias("node"))
                 .distinct()
@@ -332,12 +328,12 @@ def top_k_geometric(
                 keep = spark.createDataFrame(
                     [(int(v),) for v in survivors], "source long"
                 )
-                frontier = ckpt(nxt.join(F.broadcast(keep), "source"))
+                frontier = eager_checkpoint(nxt.join(F.broadcast(keep), "source"))
                 release_local_checkpoint(nxt)
             else:
                 frontier = nxt
             # nxt was anti-joined against visited, so no duplicates
-            visited = ckpt(visited.unionByName(frontier))
+            visited = eager_checkpoint(visited.unionByName(frontier))
             # level d-1's frames are garbage once level d materialized
             release_local_checkpoint(prev_visited)
             if prev_frontier is not prev_visited:

@@ -31,14 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..operators.transforms import no_loops, symmetrize
+from ..plans.iterate import eager_checkpoint
 from .triangles import _oriented
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    cached = df.persist()
-    out = cached.localCheckpoint(eager=True)
-    cached.unpersist()
-    return out
 
 
 def _canonical(edges: DataFrame) -> DataFrame:
@@ -111,7 +105,7 @@ def ktruss(
             spark.conf.get("spark.sql.shuffle.partitions", "32")
         )
 
-    cur = _materialize(_canonical(edges).repartition(num_partitions, "src"))
+    cur = eager_checkpoint(_canonical(edges).repartition(num_partitions, "src"))
     n = cur.count()
     for _ in range(max_rounds):
         if n == 0:
@@ -119,7 +113,7 @@ def ktruss(
                 "src", "dst", F.lit(0).cast("long").alias("support")
             ).where(F.lit(False))
         sup = edge_support(cur)
-        keep = _materialize(
+        keep = eager_checkpoint(
             cur.join(
                 sup.where(F.col("sup") >= k - 2), ["src", "dst"], "left_semi"
             )

@@ -14,7 +14,7 @@ properties BVGraph.java:2554-2650). In Spark the concerns map to:
 - **per-partition lineage/metrics**: for every output file (= partition
   of the durable artifact) of every iteration, a row count plus an
   order-insensitive BIT_XOR(xxhash64(*)) checksum — verifiable without
-  re-reading history, stored in ``<base>/_lineage``. The rows are
+  re-reading history, stored in ``<base>/lineage``. The rows are
   computed once per run, not once per iteration: one multi-path scan
   over that run's ``iter_*`` directories when the loop ends (converged,
   ``max_iter`` or an exception). A resumed run first backfills rows,
@@ -68,16 +68,19 @@ def release_local_checkpoint(df: DataFrame) -> None:
 
 
 def eager_checkpoint(df: DataFrame) -> DataFrame:
-    """persist → eager localCheckpoint → unpersist, in one action.
+    """persist → eager localCheckpoint → unpersist, in one action: the
+    checkpoint job materializes through the cache, and an
+    ``Observation`` attached to ``df`` fires on it. Every in-memory
+    iteration state and every loop-local materialization of the engine
+    goes through here.
 
-    The persist is load-bearing, not an optimization (same reason as in
-    :func:`iterate`): Spark 4's ``localCheckpoint`` copies sizeInBytes
-    stats from the SOURCE plan, and join-product estimates COMPOUND
-    across nested checkpoints — BigInt digit counts double per level,
-    costing minutes of driver CPU within a few dozen nested checkpoints.
+    The persist is load-bearing, not an optimization: Spark 4's
+    ``localCheckpoint`` copies sizeInBytes stats from the SOURCE plan,
+    and join-product estimates COMPOUND across nested checkpoints —
+    BigInt digit counts double per level, costing minutes of driver CPU
+    within a few dozen nested checkpoints (iteration ~25 of a loop).
     The InMemoryRelation interposed by ``persist`` caps the stats and
-    resets the growth at every checkpoint. An ``Observation`` attached
-    to ``df`` fires on the checkpoint job.
+    resets the growth at every checkpoint.
     """
     cached = df.persist()
     out = cached.localCheckpoint(eager=True)
@@ -157,7 +160,7 @@ def iteration_confs(spark: SparkSession, extra: dict | None = None):
                 spark.conf.set(k, v)
 
 
-# one row per (iteration, state file) in <base>/_lineage
+# one row per (iteration, state file) in <base>/lineage
 LINEAGE_SCHEMA = (
     "run_id string, iteration int, file string, rows long, checksum long, "
     "t_write_ms int, ts timestamp, metrics string"
@@ -180,7 +183,7 @@ class CheckpointManager:
         self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
         self._Path = jvm.org.apache.hadoop.fs.Path
         self._fs = self._Path(self.base_dir).getFileSystem(self._hconf)
-        self._lineage_path = f"{self.base_dir}/_lineage"
+        self._lineage_path = f"{self.base_dir}/lineage"
         # (iteration, t_write_ms, metrics) awaiting flush_lineage, and the
         # schema the states were written with (one step -> one schema)
         self._pending: list[tuple] = []
@@ -240,7 +243,9 @@ class CheckpointManager:
         """Queue lineage rows, with null ``t_write_ms`` and ``metrics``,
         for every completed iteration that has none: a run killed
         before its :meth:`flush_lineage` wrote its states but not their
-        lineage."""
+        lineage. A directory whose table was written under the old
+        hidden name ``_lineage`` has none under ``lineage`` either, so
+        all its iterations are queued."""
         have: set[int] = set()
         if self._exists(self._lineage_path):
             have = {
@@ -255,7 +260,7 @@ class CheckpointManager:
     def flush_lineage(self) -> None:
         """Append the per-file rows (count plus order-insensitive
         ``BIT_XOR(xxhash64(*))`` checksum) of every queued iteration to
-        ``<base>/_lineage``: one multi-path scan with the known schema,
+        ``<base>/lineage``: one multi-path scan with the known schema,
         grouped by ``input_file_name()``, the iteration parsed from the
         file's ``iter_<k>`` directory and its write time and metrics
         looked up from a literal map — one Spark job."""
@@ -349,18 +354,7 @@ def iterate(
             if mgr is not None:
                 new_state = mgr.save(new_state, k, metrics)  # action: write
             else:
-                # persist THEN eagerly localCheckpoint: one action total
-                # (the checkpoint job materializes through the cache and the
-                # Observation fires on it). The persist is load-bearing, not
-                # an optimization: Spark 4's localCheckpoint rewrites
-                # LogicalRDD stats from the source plan, and join-product
-                # sizeInBytes estimates COMPOUND across nested checkpoints
-                # (BigInt digits double per iteration -> minutes of driver
-                # CPU by iteration ~25); the InMemoryRelation in between
-                # caps the stats and resets that growth every iteration.
-                cached = new_state.persist()
-                new_state = cached.localCheckpoint(eager=True)
-                cached.unpersist()
+                new_state = eager_checkpoint(new_state)  # action
             obs_metrics = dict(obs.get) if obs is not None else {}
             prev = state
             state = new_state

@@ -22,6 +22,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..plans.iterate import eager_checkpoint
+
 
 def assign_dense_ids(
     df: DataFrame,
@@ -78,11 +80,9 @@ def assign_dense_ids(
     # repartitionByRange samples fresh range bounds on each execution —
     # the two branches can then disagree on node->id (observed: 16k/18k
     # nodes differing between the src- and dst-side evaluations, arcs
-    # silently merged by the downstream distinct). persist +
-    # localCheckpoint pins one evaluation (plans/iterate.py posture); at
-    # cluster scale this is the dictionary's durable table write.
-    cached = out.persist()
-    out = cached.localCheckpoint(eager=True)
-    cached.unpersist()
+    # silently merged by the downstream distinct). An eager checkpoint
+    # pins one evaluation; at cluster scale this is the dictionary's
+    # durable table write.
+    out = eager_checkpoint(out)
     sorted_df.unpersist()
     return out
