@@ -85,6 +85,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, functions as F
 
+from ..plans.iterate import eager_checkpoint, iteration_confs, release_local_checkpoint
+
 
 def _alpha(m: int) -> float:
     if m == 16:
@@ -249,12 +251,6 @@ def hyperball(
             F.lit(True).alias("chg"),
         )
         .repartition(num_partitions, "node")
-    )
-
-    from ..plans.iterate import (
-        eager_checkpoint,
-        iteration_confs,
-        release_local_checkpoint,
     )
 
     # NF sums accumulate in DECIMAL(38,9): exact, order-independent
@@ -690,12 +686,6 @@ def hyperball_wide(
             F.sum(nnzp).alias("nnz"),
             F.sum(rtp).alias("rt"),
         )
-
-    from ..plans.iterate import (
-        eager_checkpoint,
-        iteration_confs,
-        release_local_checkpoint,
-    )
 
     d38 = "decimal(38,9)"
     nf_sum = F.sum(F.col("est").cast(d38)).cast("double")

@@ -28,11 +28,7 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Observation, functions as F
 
-from ..plans.iterate import (
-    eager_checkpoint,
-    iteration_confs,
-    release_local_checkpoint,
-)
+from ..plans.iterate import eager_checkpoint, iteration_confs, release_local_checkpoint
 from .bfs import _frontier_bfs
 
 

@@ -36,11 +36,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .bfs import bfs
 from ..operators.transforms import symmetrize, transpose
-from ..plans.iterate import (
-    eager_checkpoint,
-    iteration_confs,
-    release_local_checkpoint,
-)
+from ..plans.iterate import eager_checkpoint, iteration_confs, release_local_checkpoint
 
 
 @dataclass
